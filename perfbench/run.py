@@ -7,15 +7,16 @@ Run from the repository root:
 
 One workload per invocation, on a single local[nproc] Spark process.
 Inputs are generated from --seed (cached under perfbench/.cache) and are
-never timed. The run sets the engine up (setup_s), warms up, times crawl
-rounds until --seconds have elapsed (at least one round; the bulk
-frontier is exhausted by its first), then checks the output against the
-workload's correctness gate. --trace 0 reports the end-to-end metrics;
---trace 1 turns on job-group spans and the Spark event log and reports
-the per-layer metrics instead. The last stdout line is one JSON object
-{"correct", "attempted", "failed", "metrics"}; the lines before it list
-every metric with its unit and sample count. Exit code 0 only when every
-check passed. METRICS.md documents the workloads and metrics.
+never timed. The run sets the engine up (setup_s), warms up, times a
+fixed number of crawl rounds, --seconds over a nominal 14 s round (at
+least one; the bulk frontier is exhausted by its first), then checks the
+output against the workload's correctness gate. --trace 0 reports the
+end-to-end metrics; --trace 1 turns on job-group spans and the Spark
+event log and reports the per-layer metrics instead. The last stdout
+line is one JSON object {"correct", "attempted", "failed", "metrics"};
+the lines before it list every metric with its unit and sample count.
+Exit code 0 only when every check passed. METRICS.md documents the
+workloads and metrics.
 """
 
 from __future__ import annotations
@@ -61,7 +62,10 @@ def sandbox(run_dir: str) -> dict[str, str]:
     os.environ["SPARK_LAUNCHER_OPTS"] = jvm_opts
     return {
         "spark.ui.showConsoleProgress": "false",
-        "spark.driver.extraJavaOptions": jvm_opts,
+        # a fixed-size driver heap: peak RSS then does not hinge on when
+        # G1 decides to grow the heap
+        "spark.driver.extraJavaOptions":
+            f"-Xms{os.environ['SPARK_DRIVER_MEM']} {jvm_opts}",
     }
 
 
@@ -115,9 +119,11 @@ def _stop_jvm(spark, jvm_pid: int) -> None:
 
 
 def _untraced_reference(args) -> float:
-    """crawl_s of an untraced run of this workload: the cached result of
-    the same seed, else the median over cached seeds, else a fresh
-    untraced run in a child process."""
+    """Wall of the first timed round of an untraced run of this workload:
+    the cached result of the same seed, else the median over cached
+    seeds, else a fresh one-round untraced run in a child process."""
+    from perfbench.workloads import NOMINAL_ROUND_S
+
     res_dir = os.path.join(HERE, ".cache", "results")
     mine = os.path.join(res_dir, f"{args.workload}-seed{args.seed}.json")
     if not os.path.exists(mine):
@@ -126,15 +132,16 @@ def _untraced_reference(args) -> float:
             vals = []
             for f in others:
                 with open(f) as fh:
-                    vals.append(json.load(fh)["crawl_s"])
+                    vals.append(json.load(fh)["first_round_s"])
             return statistics.median(vals)
         subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--workload", args.workload,
-             "--seed", str(args.seed), "--seconds", str(args.seconds), "--trace", "0"],
+             "--seed", str(args.seed), "--seconds", str(NOMINAL_ROUND_S),
+             "--trace", "0"],
             cwd=ROOT, stdout=subprocess.DEVNULL, check=True, timeout=RUN_LIMIT_S,
         )
     with open(mine) as fh:
-        return json.load(fh)["crawl_s"]
+        return json.load(fh)["first_round_s"]
 
 
 def end_to_end(crawl, peak_rss: int) -> dict[str, tuple[float, int]]:
@@ -244,7 +251,7 @@ def main(argv: list[str] | None = None) -> int:
                 from perfbench.layers import probe_layers
 
                 layer = probe_layers(spark, crawl, ctx)
-                layer["trace.overhead_s"] = sum(crawl.round_walls) - reference
+                layer["trace.overhead_s"] = crawl.round_walls[0] - reference
             else:
                 units = {m["name"]: m["unit"] for m in _declared("end_to_end")}
                 for k, (v, n) in end_to_end(crawl, peak).items():
@@ -274,7 +281,8 @@ def main(argv: list[str] | None = None) -> int:
             os.makedirs(os.path.join(HERE, ".cache", "results"), exist_ok=True)
             with open(os.path.join(HERE, ".cache", "results",
                                    f"{args.workload}-seed{args.seed}.json"), "w") as fh:
-                json.dump({k: v for k, (v, _u, _n) in metrics.items()}, fh)
+                json.dump({"first_round_s": crawl.round_walls[0],
+                           **{k: v for k, (v, _u, _n) in metrics.items()}}, fh)
     except Exception:
         traceback.print_exc()
         crashed = True

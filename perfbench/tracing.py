@@ -210,21 +210,52 @@ def rss_bytes(pid: int) -> int:
         return 0
 
 
-class PeakRss(threading.Thread):
-    """Samples the summed resident memory of a process tree (the JVM and
-    its Python workers) and keeps the peak. psutil is not available, so
-    this reads /proc directly."""
+def _exe(pid: int) -> str | None:
+    try:
+        return os.readlink(f"/proc/{pid}/exe")
+    except OSError:
+        return None
 
-    def __init__(self, root_pid: int, interval: float = 0.1) -> None:
+
+def pss_bytes(pid: int) -> int:
+    """Proportional set size: resident pages, each shared page divided
+    among the processes that map it."""
+    try:
+        with open(f"/proc/{pid}/smaps_rollup") as fh:
+            for line in fh:
+                if line.startswith("Pss:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return 0
+
+
+class PeakRss(threading.Thread):
+    """Samples the resident memory of a process tree and keeps the peak:
+    the JVM's RSS plus the proportional set size of its Python workers,
+    which are forked from one daemon and share its pages copy-on-write
+    (summing their RSS would count those pages once per worker). The
+    JVM shares next to nothing, and its PSS costs a page-table walk of
+    the whole heap per read. A child the JVM is spawning still runs the
+    JVM's image and shares its address space until it execs, so such
+    children are skipped rather than counted as a second JVM. psutil is
+    not available, so this reads /proc directly."""
+
+    def __init__(self, root_pid: int, interval: float = 0.5) -> None:
         super().__init__(daemon=True)
         self.root_pid = root_pid
+        self.root_exe = _exe(root_pid)
         self.interval = interval
         self.peak = 0
         self._stop_evt = threading.Event()
 
     def sample(self) -> None:
-        pids = [self.root_pid, *descendants(self.root_pid)]
-        self.peak = max(self.peak, sum(rss_bytes(p) for p in pids))
+        total = rss_bytes(self.root_pid) + sum(
+            pss_bytes(p)
+            for p in descendants(self.root_pid)
+            if _exe(p) != self.root_exe
+        )
+        self.peak = max(self.peak, total)
 
     def run(self) -> None:
         while not self._stop_evt.is_set():

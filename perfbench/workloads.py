@@ -39,7 +39,7 @@ from ethereum_raw_data_crawler_spark.sources import synth, xlgen
 # shuffled-hash fetch join above 100k popped URLs, but a round that size
 # does not fit the benchmark's per-run time budget (see METRICS.md), so
 # this round takes the small-k pop and the broadcast fetch join.
-BULK_PAGES = 50_000
+BULK_PAGES = 40_000
 BULK_HOSTS = 1000
 
 # incremental_crawl: fixture corpus shape (Zipf hosts, robots disallows,
@@ -49,7 +49,16 @@ INC_BATCH = 5000
 INC_HOST_BUDGET = 20
 
 GATE_TEXT_SAMPLE = 200
-WARMUP_PARSE_ROWS = 2000
+WARMUP_PARSE_ROWS = 500
+
+# the timed phase of a run is a fixed number of rounds, --seconds divided
+# by this nominal round time (reference machine) and rounded, so every run
+# of a workload does the same work whatever the machine's speed
+NOMINAL_ROUND_S = 14.0
+
+
+def timed_round_count(seconds: float) -> int:
+    return max(1, round(seconds / NOMINAL_ROUND_S))
 
 
 # ------------------------------------------------------------------ inputs
@@ -200,21 +209,18 @@ def _read(spark, inputs: str, name: str):
     return spark.read.parquet(os.path.join(inputs, f"{name}.parquet"))
 
 
-def _timed_rounds(eng, ledger, tracer, seconds: float):
-    """Rounds until ``seconds`` have elapsed (at least one) or the
-    frontier is exhausted; each round is timed around run_round, so the
-    wall includes commit, bloom fold and compaction."""
+def _timed_rounds(eng, ledger, tracer, n_rounds: int):
+    """``n_rounds`` rounds, or fewer when the frontier is exhausted; each
+    round is timed around run_round, so the wall includes commit, bloom
+    fold and compaction."""
     walls, stats = [], []
-    t_start = time.perf_counter()
-    while True:
+    for _ in range(n_rounds):
         rnd = eng.store.round + 1
         with tracer.span("plans.rounds.run_round", round=rnd):
             t0 = time.perf_counter()
             st = ledger.call(eng.run_round, rnd)
             walls.append(time.perf_counter() - t0)
         stats.append(st)
-        if time.perf_counter() - t_start >= seconds:
-            break
         if st["discovered"] == 0 and ledger.call(eng.pending_count) == 0:
             break
     return walls, stats
@@ -252,7 +258,9 @@ def _crawl(spark, ctx, inputs: str, pages_pdf, n_seeds: int, create) -> Crawl:
     log("warmed up")
     bytes_before = store_bytes(root)
     first = eng.store.round + 1
-    walls, stats = _timed_rounds(eng, ctx.ledger, ctx.tracer, ctx.seconds)
+    walls, stats = _timed_rounds(
+        eng, ctx.ledger, ctx.tracer, timed_round_count(ctx.seconds)
+    )
     log(f"timed {len(walls)} round(s): {sum(walls):.1f}s")
     pages_out = eng.store.manifest()["tables"]["pages_out"]["fragments"]
     return Crawl(
