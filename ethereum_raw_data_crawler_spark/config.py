@@ -31,6 +31,11 @@ from datetime import datetime, timezone
 EPOCH = datetime(2025, 1, 1, tzinfo=timezone.utc)
 EPOCH_UNIX = int(EPOCH.timestamp())
 
+#: Most rows the engine collects to the driver in place of a Spark job: a
+#: round's frontier delete keys and the keys of a seen-filter fold. Past
+#: it, the work stays distributed.
+DRIVER_COLLECT_MAX_ROWS = 200_000
+
 
 @dataclass(frozen=True)
 class CrawlConfig:

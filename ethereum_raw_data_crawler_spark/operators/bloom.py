@@ -14,14 +14,20 @@ the exact anti-join backstop, so the filter is correctness-neutral
 Scale design (SURVEY §Phase 3): the bitmap is PARTITIONED by
 ``url_hash`` bucket — one immutable bitmap file per bucket beside the
 snapshot manifest, referenced by a versioned meta JSON (same
-atomic-swap protocol as the table manifests). Maintenance is
-executor-side Spark jobs end to end:
+atomic-swap protocol as the table manifests). Maintenance:
 
-  * per-round OR-in of the new seen fragment: repartition the new keys
-    by bucket, each task folds ITS buckets' keys into the prior bitmap
-    file and writes a new immutable file (an LSM-style merge);
+  * per-round OR-in of the new seen fragment: one fold over an int64 key
+    array groups the keys by bucket, ORs each bucket's keys into its
+    prior bitmap file and writes a new immutable file (an LSM-style
+    merge). While the whole filter fits ``BROADCAST_MAX_BYTES`` (the
+    regime in which the probe already loads every bucket on the driver)
+    and the keys fit ``DRIVER_COLLECT_MAX_ROWS``, the fold runs on the
+    driver: no Spark job, just the touched buckets' files. Otherwise the
+    keys repartition by bucket and each task runs the same fold over ITS
+    buckets, so a 10^10-key filter never materializes on the driver;
   * growth is per-bucket: a saturated bucket is rebuilt alone, from the
-    seen table filtered to that bucket, at its next size;
+    seen table filtered to that bucket, at its next size (always the
+    bucket-aligned Spark job);
   * probe: small total bitmaps broadcast (exactly the current local
     regime); past ``BROADCAST_MAX_BYTES`` the candidates repartition by
     bucket and each task loads only the bitmap files of the buckets it
@@ -57,6 +63,7 @@ Python).
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
@@ -65,6 +72,8 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+
+from ethereum_raw_data_crawler_spark.config import DRIVER_COLLECT_MAX_ROWS
 
 
 def _mix(h: np.ndarray, salt: int) -> np.ndarray:
@@ -123,6 +132,124 @@ def _capacity(n_bits: int, k: int) -> int:
     """Keys at which the set-bit fraction reaches ~0.5 (the classic
     design point: FPR ≈ 0.5^k there)."""
     return int(n_bits * math.log(2) / k)
+
+
+def fits_driver(filt, bits: int) -> bool:
+    """The one driver-residency test of a partitioned filter: ``bits`` of
+    filter fit ``filt.BROADCAST_MAX_BYTES``. ``probe_split`` broadcasts
+    when the materialized buckets fit; ``add_keys``/``delete_keys`` fold
+    on the driver when the whole filter (``full_bits``) does."""
+    return bits // 8 <= filt.BROADCAST_MAX_BYTES
+
+
+def driver_keys(filt, keys, key_col: str) -> np.ndarray | None:
+    """The int64 keys to fold on the driver, or None for the
+    bucket-aligned Spark job: the filter must fit the driver and the keys
+    ``DRIVER_COLLECT_MAX_ROWS``. An array the caller holds is taken as
+    is; a DataFrame costs one ``limit(bound + 1)`` Arrow collect of
+    ``key_col``."""
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    if not fits_driver(filt, filt.full_bits):
+        return None
+    if isinstance(keys, DataFrame):
+        keys = (
+            keys.select(F.col(key_col).cast("long").alias("_key"))
+            .limit(DRIVER_COLLECT_MAX_ROWS + 1)
+            .toPandas()["_key"]
+        )
+    arr = np.asarray(keys, dtype=np.int64)
+    return arr if len(arr) <= DRIVER_COLLECT_MAX_ROWS else None
+
+
+def keys_frame(keys, key_col: str):
+    """``keys`` as a one-column DataFrame for the Spark job path (an array
+    the caller holds is shipped once through the active session)."""
+    from pyspark.sql import DataFrame, SparkSession
+
+    if isinstance(keys, DataFrame):
+        return keys
+    return SparkSession.getActiveSession().createDataFrame(
+        pd.DataFrame({key_col: np.asarray(keys, dtype=np.int64)})
+    )
+
+
+def by_bucket(keys: np.ndarray, n_buckets: int) -> Iterator[tuple[int, np.ndarray]]:
+    """(bucket, keys) groups of an int64 key array, ``pmod(key, n)``
+    bucketing; keys keep their input order within a bucket (cuckoo
+    placement depends on it)."""
+    if not len(keys):
+        return
+    bks = np.mod(keys, n_buckets)
+    order = np.argsort(bks, kind="stable")
+    bks, keys = bks[order], keys[order]
+    starts = np.flatnonzero(np.r_[True, bks[1:] != bks[:-1]])
+    for lo, hi in zip(starts, np.r_[starts[1:], len(keys)]):
+        yield int(bks[lo]), keys[lo:hi]
+
+
+def _fold_buckets(
+    keys: np.ndarray,
+    n_buckets: int,
+    bloom_dir: str,
+    rnd: int,
+    prior: dict[int, tuple[str | None, int, int]],
+    default_mk: tuple[int, int],
+    merge_prior: bool,
+    sizes: dict[int, tuple[int, int]],
+) -> list[tuple[int, str, int, int, int]]:
+    """Fold int64 keys into their buckets' bitmaps: per touched bucket,
+    OR the keys into the prior file (``merge_prior``) or a fresh bitmap
+    (sized by ``sizes`` when listed) and write a new immutable file.
+    Returns (bucket, file, n_bits, k, added) rows. The same function runs
+    on the driver and inside each task of the bucket-aligned job."""
+    rows = []
+    for b, bkeys in by_bucket(keys, n_buckets):
+        if b in sizes:
+            m, k = sizes[b]
+            words = np.zeros(m // 64, dtype=np.uint64)
+        else:
+            file, m, k = prior.get(b, (None, *default_mk))
+            if merge_prior and file is not None:
+                words = np.load(os.path.join(bloom_dir, file))
+            else:
+                words = np.zeros(m // 64, dtype=np.uint64)
+        bitmap_add(words, bkeys, k, m)
+        fname = f"b{b:05d}-r{rnd}-{uuid.uuid4().hex[:8]}.npy"
+        np.save(os.path.join(bloom_dir, fname), words)
+        rows.append((b, fname, m, k, len(bkeys)))
+    return rows
+
+
+def run_fold_job(
+    keys_df,
+    key_col: str,
+    n_buckets: int,
+    fold,
+    out_schema,
+    bucket_filter: list[int] | None = None,
+) -> list[tuple]:
+    """The bucket-aligned Spark job shared by both partitioned filters:
+    repartition keys by ``pmod(key, n_buckets)`` and run ``fold`` (an
+    int64-array -> stat-rows function) over each task's keys. Only the
+    stat rows reach the driver."""
+    from pyspark.sql import functions as F
+
+    columns = out_schema.fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        chunks = [pdf["_key"].to_numpy(dtype=np.int64) for pdf in batches]
+        rows = fold(np.concatenate(chunks)) if chunks else []
+        if rows:
+            yield pd.DataFrame(rows, columns=columns)
+
+    bucket = F.pmod(F.col("_key"), F.lit(n_buckets))
+    keyed = keys_df.select(F.col(key_col).cast("long").alias("_key"))
+    if bucket_filter is not None:
+        keyed = keyed.where(bucket.isin([int(b) for b in bucket_filter]))
+    aligned = keyed.repartition(n_buckets, bucket)
+    return [tuple(r) for r in aligned.mapInPandas(run, out_schema).collect()]
 
 
 class BloomFilter:
@@ -358,99 +485,79 @@ class PartitionedBloom:
             if e["n_added"] > _capacity(e["n_bits"], e["k"])
         ]
 
-    # ---- executor-side maintenance -------------------------------------------
-    def _fold_job(
+    @property
+    def full_bits(self) -> int:
+        """Bits once every bucket is materialized (empty buckets at the
+        default size): the most a driver-side fold loads or allocates."""
+        n_files = sum(1 for e in self.buckets.values() if e.get("file"))
+        return self.total_bits + (self.n_buckets - n_files) * self.default_n_bits
+
+    # ---- maintenance -------------------------------------------------------
+    def _fold(
         self,
-        keys_df,
+        keys,
         key_col: str,
         rnd: int,
         merge_prior: bool,
         sizes: dict[int, tuple[int, int]] | None = None,
         bucket_filter: list[int] | None = None,
-    ) -> list:
-        """Shared Spark job: repartition keys by bucket; each task folds its
-        buckets' keys into a bitmap (ORing into the prior file when
-        ``merge_prior``) and writes a new immutable file. Returns the
-        collected per-bucket stat rows — the only thing that ever reaches
-        the driver."""
-        from pyspark.sql import functions as F
+    ) -> None:
+        """Run :func:`_fold_buckets` — on the driver for an OR-in
+        (``merge_prior``) when the filter and keys fit it (see
+        :func:`driver_keys`), else as the bucket-aligned Spark job (always
+        for a growth rebuild) — then record the new bucket files and
+        commit the meta for ``rnd``."""
         from pyspark.sql import types as T
 
-        B = self.n_buckets
-        bloom_dir = self.dir
-        prior = {
-            int(b): (e.get("file"), int(e["n_bits"]), int(e["k"]))
-            for b, e in self.buckets.items()
-        }
-        default_m, default_k = self.default_n_bits, self.default_k
-        sizes = sizes or {}
-
-        out_schema = T.StructType(
-            [
-                T.StructField("bucket", T.IntegerType(), False),
-                T.StructField("file", T.StringType(), False),
-                T.StructField("n_bits", T.LongType(), False),
-                T.StructField("k", T.IntegerType(), False),
-                T.StructField("added", T.LongType(), False),
-            ]
+        fold = functools.partial(
+            _fold_buckets,
+            n_buckets=self.n_buckets,
+            bloom_dir=self.dir,
+            rnd=rnd,
+            prior={
+                int(b): (e.get("file"), int(e["n_bits"]), int(e["k"]))
+                for b, e in self.buckets.items()
+            },
+            default_mk=(self.default_n_bits, self.default_k),
+            merge_prior=merge_prior,
+            sizes=sizes or {},
         )
-
-        def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            per_bucket: dict[int, list[np.ndarray]] = {}
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                keys = pdf["_key"].to_numpy(dtype=np.int64)
-                bks = np.mod(keys, B)
-                for b in np.unique(bks):
-                    per_bucket.setdefault(int(b), []).append(keys[bks == b])
-            rows = []
-            for b, chunks in per_bucket.items():
-                keys = np.concatenate(chunks)
-                if b in sizes:
-                    m, k = sizes[b]
-                    words = np.zeros(m // 64, dtype=np.uint64)
-                else:
-                    file, m, k = prior.get(b, (None, default_m, default_k))
-                    if merge_prior and file is not None:
-                        words = np.load(os.path.join(bloom_dir, file))
-                    else:
-                        words = np.zeros(m // 64, dtype=np.uint64)
-                bitmap_add(words, keys, k, m)
-                fname = f"b{b:05d}-r{rnd}-{uuid.uuid4().hex[:8]}.npy"
-                np.save(os.path.join(bloom_dir, fname), words)
-                rows.append((b, fname, m, k, len(keys)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["bucket", "file", "n_bits", "k", "added"]
-                )
-
-        keyed = keys_df.select(F.col(key_col).cast("long").alias("_key"))
-        if bucket_filter is not None:
-            keyed = keyed.where(
-                F.pmod(F.col("_key"), F.lit(B)).isin([int(b) for b in bucket_filter])
+        arr = driver_keys(self, keys, key_col) if merge_prior else None
+        if arr is not None:
+            stats = fold(arr)
+        else:
+            out_schema = T.StructType(
+                [
+                    T.StructField("bucket", T.IntegerType(), False),
+                    T.StructField("file", T.StringType(), False),
+                    T.StructField("n_bits", T.LongType(), False),
+                    T.StructField("k", T.IntegerType(), False),
+                    T.StructField("added", T.LongType(), False),
+                ]
             )
-        return (
-            keyed.repartition(B, F.pmod(F.col("_key"), F.lit(B)))
-            .mapInPandas(fold, out_schema)
-            .collect()
-        )
-
-    def add_keys(self, keys_df, key_col: str, rnd: int) -> list[int]:
-        """OR a round's new keys into the bucket bitmaps — one Spark job,
-        nothing but per-bucket stat rows on the driver. Commits a new meta
-        for ``rnd`` and returns the buckets now past design capacity."""
-        stats = self._fold_job(keys_df, key_col, rnd, merge_prior=True)
-        for r in stats:
-            b = int(r["bucket"])
-            old = self.buckets.get(b, {"n_added": 0})
+            stats = run_fold_job(
+                keys_frame(keys, key_col),
+                key_col,
+                self.n_buckets,
+                fold,
+                out_schema,
+                bucket_filter,
+            )
+        for b, file, m, k, added in stats:
+            if merge_prior and b in self.buckets:
+                added += self.buckets[b]["n_added"]
             self.buckets[b] = {
-                "file": r["file"],
-                "n_bits": int(r["n_bits"]),
-                "k": int(r["k"]),
-                "n_added": old["n_added"] + int(r["added"]),
+                "file": file, "n_bits": int(m), "k": int(k), "n_added": int(added)
             }
         self._write_meta(rnd)
+
+    def add_keys(self, keys, key_col: str, rnd: int) -> list[int]:
+        """OR a round's new keys (a DataFrame with ``key_col``, or an int64
+        array) into the bucket bitmaps — on the driver when the filter and
+        the keys fit it, else one bucket-aligned Spark job. Commits a new
+        meta for ``rnd`` and returns the buckets now past design
+        capacity."""
+        self._fold(keys, key_col, rnd, merge_prior=True)
         return self.saturated_buckets()
 
     def grow_buckets(
@@ -464,19 +571,14 @@ class PartitionedBloom:
             int(b): _optimal_m_k(2 * self.buckets[b]["n_added"], self.fpr)
             for b in grow
         }
-        stats = self._fold_job(
-            all_keys_df, key_col, rnd, merge_prior=False, sizes=sizes,
+        self._fold(
+            all_keys_df,
+            key_col,
+            rnd,
+            merge_prior=False,
+            sizes=sizes,
             bucket_filter=grow,
         )
-        for r in stats:
-            b = int(r["bucket"])
-            self.buckets[b] = {
-                "file": r["file"],
-                "n_bits": int(r["n_bits"]),
-                "k": int(r["k"]),
-                "n_added": int(r["added"]),
-            }
-        self._write_meta(rnd)
 
     # ---- probe -----------------------------------------------------------------
     def probe_split(self, df, key_col: str, spark, scratch=None):
@@ -497,7 +599,7 @@ class PartitionedBloom:
             + [T.StructField("_maybe_seen", T.BooleanType(), False)]
         )
 
-        if self.total_bits // 8 <= self.BROADCAST_MAX_BYTES:
+        if fits_driver(self, self.total_bits):
             self.last_probe_mode = "broadcast"
             blobs = {
                 b: (

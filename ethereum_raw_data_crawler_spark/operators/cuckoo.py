@@ -40,12 +40,17 @@ done from fingerprints alone (the upper hash bits are gone), so growth =
 per-bucket rebuild from the seen table — the same ground-truth-rebuild
 protocol ``PartitionedBloom.grow_buckets`` uses.
 
-Vectorized numpy throughout; Spark surface is mapInPandas (Arrow
-batches, no per-row Python), mirroring operators/bloom.py.
+Maintenance mirrors operators/bloom.py: add/delete is one function over
+an int64 key array (group by bucket, load the prior filter file, apply,
+write a new immutable file), run on the driver while the whole filter
+fits ``BROADCAST_MAX_BYTES`` and the keys fit ``DRIVER_COLLECT_MAX_ROWS``,
+else inside the tasks of a bucket-aligned Spark job (mapInPandas over
+Arrow batches, no per-row Python). Growth is always that job.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
@@ -55,7 +60,14 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from ethereum_raw_data_crawler_spark.operators.bloom import _mix
+from ethereum_raw_data_crawler_spark.operators.bloom import (
+    _mix,
+    by_bucket,
+    driver_keys,
+    fits_driver,
+    keys_frame,
+    run_fold_job,
+)
 
 _SLOTS = 4
 _DESIGN_LOAD = 0.90  # rebuild trigger; 4-slot cuckoo fills to ~0.95
@@ -246,6 +258,41 @@ class CuckooFilter:
         return cf
 
 
+def _apply_buckets(
+    keys: np.ndarray,
+    n_buckets: int,
+    cdir: str,
+    rnd: int,
+    op: str,
+    prior: dict[int, str],
+    default_nb: int,
+    sizes: dict[int, int],
+) -> list[tuple[int, str, int, int, int]]:
+    """Apply ``op`` ("add" | "delete" | "rebuild") to int64 keys, bucket
+    by bucket: load the prior filter file (a fresh table, sized by
+    ``sizes`` when listed, for "rebuild"), apply, write a new immutable
+    file. Returns (bucket, file, nb, n_added, applied) rows. The same
+    function runs on the driver and inside each task of the
+    bucket-aligned job."""
+    rows = []
+    for b, bkeys in by_bucket(keys, n_buckets):
+        if op == "rebuild":
+            cf = CuckooFilter(sizes.get(b, default_nb))
+        elif b in prior:
+            cf = CuckooFilter.load(os.path.join(cdir, prior[b]))
+        else:
+            cf = CuckooFilter(default_nb)
+        if op == "delete":
+            applied = cf.delete_many(bkeys)
+        else:
+            cf.add_many(bkeys)
+            applied = len(bkeys)
+        fname = f"c{b:05d}-r{rnd}-{uuid.uuid4().hex[:8]}.npz"
+        cf.save(os.path.join(cdir, fname))
+        rows.append((b, fname, cf.nb, cf.n_added, applied))
+    return rows
+
+
 class PartitionedCuckoo:
     """Per-``url_hash``-bucket cuckoo filters at rest — the deletable twin
     of :class:`~..operators.bloom.PartitionedBloom`, same layout and
@@ -385,114 +432,82 @@ class PartitionedCuckoo:
             if e["n_added"] > int(e["nb"] * _SLOTS * _DESIGN_LOAD)
         ]
 
-    # ---- executor-side maintenance -------------------------------------------
-    def _apply_job(
+    @property
+    def full_bits(self) -> int:
+        """Bits once every bucket is materialized (empty buckets at the
+        default size): the most a driver-side apply loads or allocates."""
+        n_files = sum(1 for e in self.buckets.values() if e.get("file"))
+        empty_bits = self.default_nb * _SLOTS * 16
+        return self.total_bits + (self.n_buckets - n_files) * empty_bits
+
+    # ---- maintenance -------------------------------------------------------
+    def _apply(
         self,
-        keys_df,
+        keys,
         key_col: str,
         rnd: int,
         op: str,
         sizes: dict[int, int] | None = None,
         bucket_filter: list[int] | None = None,
-    ) -> list:
-        """Shared Spark job (mirror of PartitionedBloom._fold_job):
-        repartition keys by bucket; each task applies ``op`` ("add" |
-        "delete" | "rebuild") to its buckets' filter and writes a new
-        immutable file. Only per-bucket stat rows reach the driver."""
-        from pyspark.sql import functions as F
+    ) -> int:
+        """Run :func:`_apply_buckets` for ``op`` — on the driver for "add" and
+        "delete" when the filter and keys fit it (see
+        :func:`~..operators.bloom.driver_keys`), else as the bucket-aligned
+        Spark job (always for "rebuild") — then record the new bucket
+        files and commit the meta for ``rnd``. Returns the keys applied."""
         from pyspark.sql import types as T
 
-        B = self.n_buckets
-        cdir = self.dir
-        prior = {
-            int(b): e.get("file") for b, e in self.buckets.items() if e.get("file")
-        }
-        default_nb = self.default_nb
-        sizes = sizes or {}
-
-        out_schema = T.StructType(
-            [
-                T.StructField("bucket", T.IntegerType(), False),
-                T.StructField("file", T.StringType(), False),
-                T.StructField("nb", T.LongType(), False),
-                T.StructField("n_added", T.LongType(), False),
-                T.StructField("applied", T.LongType(), False),
-            ]
+        apply = functools.partial(
+            _apply_buckets,
+            n_buckets=self.n_buckets,
+            cdir=self.dir,
+            rnd=rnd,
+            op=op,
+            prior={
+                int(b): e["file"] for b, e in self.buckets.items() if e.get("file")
+            },
+            default_nb=self.default_nb,
+            sizes=sizes or {},
         )
-
-        def apply(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            per_bucket: dict[int, list[np.ndarray]] = {}
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                keys = pdf["_key"].to_numpy(dtype=np.int64)
-                bks = np.mod(keys, B)
-                for b in np.unique(bks):
-                    per_bucket.setdefault(int(b), []).append(keys[bks == b])
-            rows = []
-            for b, chunks in per_bucket.items():
-                keys = np.concatenate(chunks)
-                if op == "rebuild":
-                    cf = CuckooFilter(sizes.get(b, default_nb))
-                    cf.add_many(keys)
-                    applied = len(keys)
-                else:
-                    f = prior.get(b)
-                    cf = (
-                        CuckooFilter.load(os.path.join(cdir, f))
-                        if f is not None
-                        else CuckooFilter(default_nb)
-                    )
-                    if op == "add":
-                        cf.add_many(keys)
-                        applied = len(keys)
-                    else:
-                        applied = cf.delete_many(keys)
-                fname = f"c{b:05d}-r{rnd}-{uuid.uuid4().hex[:8]}.npz"
-                cf.save(os.path.join(cdir, fname))
-                rows.append((b, fname, cf.nb, cf.n_added, applied))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["bucket", "file", "nb", "n_added", "applied"]
-                )
-
-        keyed = keys_df.select(F.col(key_col).cast("long").alias("_key"))
-        if bucket_filter is not None:
-            keyed = keyed.where(
-                F.pmod(F.col("_key"), F.lit(B)).isin([int(b) for b in bucket_filter])
+        arr = None if op == "rebuild" else driver_keys(self, keys, key_col)
+        if arr is not None:
+            stats = apply(arr)
+        else:
+            out_schema = T.StructType(
+                [
+                    T.StructField("bucket", T.IntegerType(), False),
+                    T.StructField("file", T.StringType(), False),
+                    T.StructField("nb", T.LongType(), False),
+                    T.StructField("n_added", T.LongType(), False),
+                    T.StructField("applied", T.LongType(), False),
+                ]
             )
-        return (
-            keyed.repartition(B, F.pmod(F.col("_key"), F.lit(B)))
-            .mapInPandas(apply, out_schema)
-            .collect()
-        )
-
-    def add_keys(self, keys_df, key_col: str, rnd: int) -> list[int]:
-        stats = self._apply_job(keys_df, key_col, rnd, op="add")
-        for r in stats:
-            self.buckets[int(r["bucket"])] = {
-                "file": r["file"],
-                "nb": int(r["nb"]),
-                "n_added": int(r["n_added"]),
-            }
+            stats = run_fold_job(
+                keys_frame(keys, key_col),
+                key_col,
+                self.n_buckets,
+                apply,
+                out_schema,
+                bucket_filter,
+            )
+        applied = 0
+        for b, file, nb, n_added, n in stats:
+            self.buckets[b] = {"file": file, "nb": int(nb), "n_added": int(n_added)}
+            applied += int(n)
         self._write_meta(rnd)
+        return applied
+
+    def add_keys(self, keys, key_col: str, rnd: int) -> list[int]:
+        """Insert keys (a DataFrame with ``key_col``, or an int64 array);
+        returns the buckets now past the design load."""
+        self._apply(keys, key_col, rnd, op="add")
         return self.saturated_buckets()
 
-    def delete_keys(self, keys_df, key_col: str, rnd: int) -> int:
-        """Unlearn keys (takedown / recrawl-TTL): each task deletes its
-        buckets' fingerprints and writes a new immutable file — the
-        operation the Bloom twin structurally cannot offer."""
-        stats = self._apply_job(keys_df, key_col, rnd, op="delete")
-        removed = 0
-        for r in stats:
-            self.buckets[int(r["bucket"])] = {
-                "file": r["file"],
-                "nb": int(r["nb"]),
-                "n_added": int(r["n_added"]),
-            }
-            removed += int(r["applied"])
-        self._write_meta(rnd)
-        return removed
+    def delete_keys(self, keys, key_col: str, rnd: int) -> int:
+        """Unlearn keys (takedown / recrawl-TTL): delete their fingerprints
+        and write new immutable files — the operation the Bloom twin
+        structurally cannot offer. Returns the number removed."""
+        return self._apply(keys, key_col, rnd, op="delete")
 
     def grow_buckets(self, all_keys_df, key_col: str, rnd: int, grow: list[int]) -> None:
         """Per-bucket growth = rebuild from the seen table at the next
@@ -502,16 +517,9 @@ class PartitionedCuckoo:
             int(b): CuckooFilter.sized_for(2 * self.buckets[b]["n_added"]).nb
             for b in grow
         }
-        stats = self._apply_job(
+        self._apply(
             all_keys_df, key_col, rnd, op="rebuild", sizes=sizes, bucket_filter=grow
         )
-        for r in stats:
-            self.buckets[int(r["bucket"])] = {
-                "file": r["file"],
-                "nb": int(r["nb"]),
-                "n_added": int(r["n_added"]),
-            }
-        self._write_meta(rnd)
 
     # ---- probe -----------------------------------------------------------------
     def probe_split(self, df, key_col: str, spark, scratch=None):
@@ -527,7 +535,7 @@ class PartitionedCuckoo:
             + [T.StructField("_maybe_seen", T.BooleanType(), False)]
         )
 
-        if self.total_bits // 8 <= self.BROADCAST_MAX_BYTES:
+        if fits_driver(self, self.total_bits):
             self.last_probe_mode = "broadcast"
             blobs = {
                 b: CuckooFilter.load(os.path.join(self.dir, e["file"]))

@@ -35,11 +35,15 @@ import os
 import time
 from dataclasses import asdict
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from ethereum_raw_data_crawler_spark.config import CrawlConfig
+from ethereum_raw_data_crawler_spark.config import (
+    DRIVER_COLLECT_MAX_ROWS,
+    CrawlConfig,
+)
 from ethereum_raw_data_crawler_spark.functions.spark_udfs import (
     canonicalize_udf,
     extract_page_udf,
@@ -326,20 +330,7 @@ class CrawlEngine:
                     # write leaves the bitmaps behind the table — catch up
                     # by folding in the missed seen fragments (never skip:
                     # a stale bitmap means false negatives = duplicates)
-                    missed = [
-                        f
-                        for f in eng.store.manifest()["tables"]["seen"][
-                            "fragments"
-                        ]
-                        if f["seq"] > bloom_rnd
-                    ]
-                    if missed:
-                        keys = eng.store._read_fragments(
-                            spark, missed, SEEN
-                        ).select("url_hash")
-                        eng._bloom.add_keys(keys, "url_hash", eng.store.round)
-                    else:
-                        eng._bloom._write_meta(eng.store.round)
+                    eng._bloom_add_from_seen_fragment(eng.store.round)
         return eng
 
     # ------------------------------------------------------------ table reads
@@ -390,11 +381,13 @@ class CrawlEngine:
         forever (bloom bits cannot be unset); that asymmetry is the
         cuckoo filter's reason to exist (operators/cuckoo.py).
 
-        Takedown lists are human-scale (bounded like the ≤200k
-        driver-side delete-key path): keys are canonicalized and hashed
-        driver-side with the SAME pinned pure functions the engine's
-        UDFs use (functions/urls.py — xxh64 JVM-equivalence is
-        pytest-pinned). Returns the number of seen rows deleted."""
+        Takedown lists are human-scale (bounded like the
+        ``DRIVER_COLLECT_MAX_ROWS`` driver-side delete-key path): keys are
+        canonicalized and hashed driver-side with the SAME pinned pure
+        functions the engine's UDFs use (functions/urls.py — xxh64
+        JVM-equivalence is pytest-pinned), and the hash array goes to the
+        filter's ``delete_keys`` as is. Returns the number of seen rows
+        deleted."""
         from ethereum_raw_data_crawler_spark.functions.urls import (
             canonicalize_url,
             url_hash64,
@@ -414,10 +407,9 @@ class CrawlEngine:
             self.spark, "seen", SEEN, pred, self.store.round
         )
         if self._bloom is not None and hasattr(self._bloom, "delete_keys"):
-            keys_df = self.spark.createDataFrame(
-                [(h,) for h in hashes], "url_hash long"
+            self._bloom.delete_keys(
+                np.array(hashes, dtype=np.int64), "url_hash", self.store.round
             )
-            self._bloom.delete_keys(keys_df, "url_hash", self.store.round)
         return n
 
     def as_of(self, rnd: int, name: str, schema) -> DataFrame:
@@ -626,11 +618,11 @@ class CrawlEngine:
     def _bloom_rebuild_spark(
         self, expected_keys: int | None = None
     ) -> "PartitionedBloom | PartitionedCuckoo":
-        """Rebuild the partitioned bitmaps from the seen table — one Spark
-        job (repartition keys by bucket, each task writes its buckets'
-        bitmap files); the driver only sees per-bucket stat rows. Sized
-        from the actual seen cardinality (parquet footer row counts, no
-        data read) with 2x headroom."""
+        """Rebuild the partitioned bitmaps from the seen table with one
+        ``add_keys`` (a driver fold for a small seen set, else one
+        bucket-aligned Spark job whose tasks write their buckets' files).
+        Sized from the actual seen cardinality (parquet footer row
+        counts, no data read) with 2x headroom."""
         frags = self.store.manifest()["tables"]["seen"]["fragments"]
         if expected_keys is None:
             expected_keys = 2 * max(self.store.fragment_rows(frags), 1)
@@ -645,22 +637,25 @@ class CrawlEngine:
         return pb
 
     def _bloom_add_from_seen_fragment(self, rnd: int) -> None:
-        """OR the just-committed seen fragment into the bucket bitmaps —
-        a Spark job over the fragment's keys (executor-side file folds,
-        only per-bucket counters reach the driver). Buckets past their
-        design capacity (saturation -> FPR collapse) are rebuilt alone at
-        their next size from the seen table."""
+        """Fold every committed seen fragment newer than the filter's
+        round (the round's own fragment; on resume, all the fragments a
+        crash kept out of the filter) into the filter and commit its meta
+        at ``rnd``. The operator folds on the driver when the filter and
+        the keys are small (no Spark job beyond one bounded key collect),
+        else in a bucket-aligned Spark job. Buckets past their design
+        capacity (saturation -> FPR collapse) are rebuilt alone at their
+        next size from the seen table."""
         if not self.use_bloom or self._bloom is None:
             return
         frags = [
             f
             for f in self.store.manifest()["tables"]["seen"]["fragments"]
-            if f["seq"] == rnd
+            if f["seq"] > self._bloom.round
         ]
         if not frags or self.store.fragment_rows(frags) == 0:
-            # nothing discovered this round: keep the bloom meta's round in
+            # nothing discovered since: keep the filter meta's round in
             # step with the table (crash catch-up compares the two) without
-            # paying an empty fold job
+            # paying an empty fold
             self._bloom._write_meta(rnd)
             return
         keys = self.store._read_fragments(self.spark, frags, SEEN).select("url_hash")
@@ -878,8 +873,6 @@ class CrawlEngine:
         if n_fetched and n_errors == 0:
             extracted = extracted_base.withColumn("seq", F.col("pop_seq"))
         elif n_fetched and n_errors <= 2_000_000:
-            import numpy as np
-
             failed_seqs = np.sort(
                 hits.where(F.col("fetch_failed"))
                 .select("pop_seq")
@@ -997,7 +990,7 @@ class CrawlEngine:
             frontier_new = fetched_upd.unionByName(discovered)
         # small pops: collect delete keys driver-side (no Spark write job);
         # large pops: keep them distributed
-        if n_popped <= 200_000:
+        if n_popped <= DRIVER_COLLECT_MAX_ROWS:
             delete_keys = popped.select("url_canon").toPandas()
         else:
             delete_keys = popped.select("url_canon")

@@ -1,7 +1,8 @@
 """SparkSession factory.
 
 Local-mode defaults tuned per the sandbox (single JVM, up to 32 threads,
-128 GiB); on a real cluster the same code runs unchanged under
+128 GiB; the driver heap defaults to half the machine's memory, capped at
+48g); on a real cluster the same code runs unchanged under
 ``spark-submit --py-files`` — nothing here assumes local mode except the
 defaults. AQE stays ON (runtime coalescing + skew-join splitting is part
 of the scale story, SURVEY.md §4.2).
@@ -12,6 +13,19 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory() -> str:
+    """Half the machine's memory in whole GiB, at most 48g (which a
+    128 GiB box keeps): a heap larger than the box can back gets the JVM
+    OOM-killed as soon as a big job grows it. 48g when ``/proc/meminfo``
+    is unreadable."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kib = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "48g"
+    return f"{max(1, min(48, kib // (2 << 20)))}g"
 
 
 def get_spark(
@@ -48,7 +62,10 @@ def get_spark(
         # local mode = driver-only: the heap hosts every cache and shuffle
         # buffer; an undersized heap turns into GC thrash that flattens
         # multi-core scaling (measured: 2.2x -> 1.4x at 32 cores on 8g)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config(
             "spark.executor.memory", os.environ.get("SPARK_EXECUTOR_MEM", "8g")
         )  # only meaningful under local-cluster / a real cluster manager

@@ -100,7 +100,7 @@ def test_save_load_roundtrip(tmp_path):
 def pc_store(spark, tmp_path):
     keys = _rand_keys(30_000, seed=13)
     pc = PartitionedCuckoo.create(
-        str(tmp_path), n_buckets=8, expected_keys=len(keys)
+        str(tmp_path), n_buckets=16, expected_keys=len(keys)
     )
     kdf = spark.createDataFrame(pd.DataFrame({"url_hash": keys}))
     pc.add_keys(kdf, "url_hash", rnd=1)
@@ -134,18 +134,36 @@ def test_partitioned_aligned_probe_mode(spark, tmp_path, pc_store, monkeypatch):
     assert pc.last_probe_mode == "aligned"
 
 
-def test_partitioned_delete_keys(spark, tmp_path, pc_store):
-    pc, keys, _ = pc_store
+def test_partitioned_delete_keys(spark, tmp_path, pc_store, bucket_stages):
+    """Add and delete fold on the driver for a small filter; a twin forced
+    onto the bucket-aligned job path (``BROADCAST_MAX_BYTES`` = 0) ends in
+    the same membership and counters (bytes may differ: placement follows
+    insertion order)."""
+    pc, keys, kdf = pc_store
+    job = PartitionedCuckoo.create(
+        str(tmp_path / "job"), n_buckets=16, expected_keys=len(keys)
+    )
+    job.BROADCAST_MAX_BYTES = 0
+    assert bucket_stages(16, lambda: job.add_keys(kdf, "url_hash", rnd=1))
+    assert job.n_added_total == pc.n_added_total == len(keys)
     victims = keys[:10_000]
     vdf = spark.createDataFrame(pd.DataFrame({"url_hash": victims}))
-    removed = pc.delete_keys(vdf, "url_hash", rnd=2)
-    assert removed == len(victims)
-    new, maybe = pc.probe_split(vdf, "url_hash", spark)
-    # unlearned: (FPR-bounded) all victims are definitely-new again
-    assert new.count() >= len(victims) - 5
+    removed, job_removed = [], []
+    assert not bucket_stages(
+        16, lambda: removed.append(pc.delete_keys(vdf, "url_hash", rnd=2))
+    )
+    assert bucket_stages(
+        16, lambda: job_removed.append(job.delete_keys(vdf, "url_hash", rnd=2))
+    )
+    assert removed == job_removed == [len(victims)]
+    assert job.n_added_total == pc.n_added_total == len(keys) - len(victims)
     survivors = spark.createDataFrame(pd.DataFrame({"url_hash": keys[10_000:]}))
-    _, maybe2 = pc.probe_split(survivors, "url_hash", spark)
-    assert maybe2.count() == len(keys) - 10_000
+    for filt in (pc, job):
+        new, maybe = filt.probe_split(vdf, "url_hash", spark)
+        # unlearned: (FPR-bounded) all victims are definitely-new again
+        assert new.count() >= len(victims) - 5
+        _, maybe2 = filt.probe_split(survivors, "url_hash", spark)
+        assert maybe2.count() == len(keys) - 10_000  # no false negatives
 
 
 def test_partitioned_grow_rebuilds_from_ground_truth(spark, tmp_path):

@@ -1,9 +1,11 @@
-"""Partitioned Bloom seen-set (round-3 scale rework): executor-side
-build/OR-in/growth as Spark jobs, bucket-aligned probe past the broadcast
-threshold with ZERO driver bitmap residency, crash catch-up of the bloom
-meta, and the NULL-predicate DELETE WHERE fix."""
+"""Partitioned Bloom seen-set: OR-in on the driver for small filters and
+as a bucket-aligned Spark job past the driver bounds (bit-identical
+either way), growth as a Spark job, bucket-aligned probe past the
+broadcast threshold with ZERO driver bitmap residency, crash catch-up of
+the bloom meta, and the NULL-predicate DELETE WHERE fix."""
 
 import glob
+import math
 import os
 
 import numpy as np
@@ -21,10 +23,22 @@ from ethereum_raw_data_crawler_spark.plans.rounds import CrawlEngine
 from ethereum_raw_data_crawler_spark.sources.tablestore import SnapshotStore
 
 
+def bucket_files_equal(a, b) -> bool:
+    """Same buckets, same n_added, bit-identical bitmap files."""
+    return a.buckets.keys() == b.buckets.keys() and all(
+        a.buckets[k]["n_added"] == b.buckets[k]["n_added"]
+        and np.array_equal(
+            np.load(os.path.join(a.dir, a.buckets[k]["file"])),
+            np.load(os.path.join(b.dir, b.buckets[k]["file"])),
+        )
+        for k in a.buckets
+    )
+
+
 # ------------------------------------------------ 10M keys, aligned probe
 
 
-def test_partitioned_bloom_10m_keys_aligned_probe(spark, tmp_path):
+def test_partitioned_bloom_10m_keys_aligned_probe(spark, tmp_path, bucket_stages):
     """Build the seen filter from 10M keys entirely executor-side, then
     probe with the broadcast path disabled: the candidates repartition by
     bucket, each task loads only its buckets' bitmap files, and the DRIVER
@@ -36,7 +50,11 @@ def test_partitioned_bloom_10m_keys_aligned_probe(spark, tmp_path):
     pb = PartitionedBloom.create(
         str(tmp_path), n_buckets=64, expected_keys=2 * n, rnd=-1
     )
-    saturated = pb.add_keys(keys, "url_hash", 0)
+    saturated = []
+    # past DRIVER_COLLECT_MAX_ROWS keys the fold is the bucket-aligned job
+    assert bucket_stages(
+        64, lambda: saturated.extend(pb.add_keys(keys, "url_hash", 0))
+    )
     assert not saturated  # sized for 20M, holds 10M comfortably
     assert pb.n_added_total == n
     assert 0.0 < pb.estimated_saturation() < 0.5
@@ -69,16 +87,31 @@ def test_partitioned_bloom_10m_keys_aligned_probe(spark, tmp_path):
     assert n_maybe_absent / 50_000 < 0.05  # FPR at the design point
 
 
-def test_partitioned_bloom_per_bucket_growth(spark, tmp_path):
+def test_partitioned_bloom_per_bucket_growth(spark, tmp_path, bucket_stages):
     """A bucket pushed past design capacity is rebuilt ALONE at its next
-    size; untouched buckets keep their files."""
-    pb = PartitionedBloom.create(
-        str(tmp_path), n_buckets=4, n_bits_per_bucket=256, k=3, rnd=-1
+    size; untouched buckets keep their files. The small fold runs on the
+    driver (no bucket-aligned stage); a twin forced onto the job path
+    (``BROADCAST_MAX_BYTES`` = 0) folds the same keys into bit-identical
+    files with the same counters and the same saturated bucket."""
+    pb, job = (
+        PartitionedBloom.create(
+            str(tmp_path / side), n_buckets=4, n_bits_per_bucket=256, k=3, rnd=-1
+        )
+        for side in ("driver", "job")
     )
+    job.BROADCAST_MAX_BYTES = 0
     # keys all land in bucket 0: pmod(4k, 4) == 0
     keys = spark.range(2_000).select((F.col("id") * 4).alias("url_hash"))
-    saturated = pb.add_keys(keys, "url_hash", 0)
-    assert saturated == [0]
+    saturated, job_saturated = [], []
+    assert not bucket_stages(
+        4, lambda: saturated.extend(pb.add_keys(keys, "url_hash", 0))
+    )
+    assert bucket_stages(
+        4, lambda: job_saturated.extend(job.add_keys(keys, "url_hash", 0))
+    )
+    assert saturated == job_saturated == [0]
+    assert pb.n_added_total == job.n_added_total == 2_000
+    assert bucket_files_equal(pb, job)
     before = {b: e["file"] for b, e in pb.buckets.items()}
     pb.grow_buckets(keys, "url_hash", 0, saturated)
     assert pb.buckets[0]["n_bits"] > 256
@@ -142,13 +175,28 @@ def test_bloom_meta_catchup_on_resume(spark, t1_tables, tmp_path):
     eng = _mk_engine(spark, tmp_path, tabs, cfg, relaxed)
     eng.run(max_rounds=2)
     last = eng.store.round
+    # the surviving pre-crash filter: one bucket that holds the keys seen
+    # before the last round below design capacity but not the last round's
+    # too, so the catch-up fold must trip (and apply) per-bucket growth
+    seen_prev = eng.seen().where(F.col("first_seen_round") < last)
+    n_prev, n_all = seen_prev.count(), eng.seen().count()
+    n_bits = math.ceil((n_prev + n_all) / 2 * 3 / math.log(2) / 64) * 64
     del eng
     # simulate the crash: drop the newest bloom meta only
     os.unlink(str(tmp_path / "store" / "bloom" / f"meta-{last:06d}.json"))
     assert PartitionedBloom.latest_round(str(tmp_path / "store")) == last - 1
+    small = PartitionedBloom.create(
+        str(tmp_path / "store"), n_buckets=1, n_bits_per_bucket=n_bits, k=3,
+        rnd=last - 1,
+    )
+    assert not small.add_keys(seen_prev.select("url_hash"), "url_hash", last - 1)
 
     resumed = CrawlEngine.resume(spark, str(tmp_path / "store"))
     assert resumed._bloom.round == last  # caught up, not stale
+    # the catch-up saturated the bucket and grew it, as a round's fold does
+    assert resumed._bloom.buckets[0]["n_added"] == n_all
+    assert resumed._bloom.buckets[0]["n_bits"] > n_bits
+    assert not resumed._bloom.saturated_buckets()
     # no false negatives after catch-up: every seen key is maybe-present
     new_def, _ = resumed._bloom.probe_split(
         resumed.seen().select("url_hash"), "url_hash", spark
